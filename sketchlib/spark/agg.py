@@ -2,10 +2,15 @@
 
 One shape for every sibling sketch (SURVEY.md §2.6 "aggregations"): build
 one partial per input partition with ``mapInPandas`` (zero shuffle, Arrow
-batches → vectorized kernel updates), then tree-merge the partial blobs with
-fan-in-bounded ``applyInPandas`` stages. Bloom/HLL/CMS merges (OR/max/add)
-are byte-deterministic under any order or partitioning; KLL/t-digest are
-estimate-stable within their published error.
+batches → vectorized kernel updates), then merge the partial blobs through
+:func:`tree_reduce`. Its fan-in-bounded ``applyInPandas`` levels are stages
+of the caller's one action: the level count comes from the input's planned
+partition count, so no sizing job and no checkpoint run first.
+:func:`build_sketch` finishes on the driver, merging the at most ``fanin``
+last-level blobs in sorted order. Bloom/HLL/CMS/KMV merges (OR/max/add/
+bottom-k) are byte-deterministic under any order or partitioning;
+KLL/t-digest are estimate-stable within their published error, and
+byte-stable for a fixed input partitioning.
 
 Built-in cross-checks at query level: ``approx_count_distinct`` (Spark's
 HLL++) and ``percentile_approx`` — our sketches must agree with the exact
@@ -14,7 +19,6 @@ oracle within bound wherever those do.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
 import numpy as np
@@ -129,51 +133,86 @@ def build_sketch_partials(df: DataFrame, spec: SketchSpec, col, col_is_hash: boo
     return sel.mapInPandas(build, SKETCH_SCHEMA)
 
 
-def merge_sketch_partials(partials: DataFrame, spec: SketchSpec, fanin: int = 64) -> DataFrame:
-    """Tree-reduce to one row per (name, kind); only blobs shuffle."""
+def _planned_partitions(df: DataFrame) -> int:
+    """Upper bound on ``df``'s partition count, read from its physical plan
+    without running a job. AQE can only coalesce partitions, never add
+    them, so the pre-AQE plan bounds what the action will see."""
 
+    def walk(plan) -> int:
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            return walk(plan.inputPlan())
+        n = plan.outputPartitioning().numPartitions()
+        if n > 0:
+            return n
+        kids = plan.children()
+        if not kids.isEmpty():
+            return sum(walk(kids.apply(i)) for i in range(kids.size()))
+        if plan.nodeName() == "InMemoryTableScan":
+            # executing a cache not yet filled runs its plan's jobs
+            return walk(plan.relation().cachedPlan())
+        return plan.execute().getNumPartitions()  # builds the scan RDD only
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+def tree_reduce(df: DataFrame, keys: list, merge_fn, schema: str, fanin: int) -> DataFrame:
+    """Merge levels of a fan-in-bounded tree over ``df``'s rows per ``keys``.
+
+    ``merge_fn(key, pdf)`` folds one group's rows into a one-row frame in
+    ``schema``. Level 1 groups by ``(keys, spark_partition_id() // fanin)``
+    and each later level by ``(keys, _g // fanin)``, so a merge task reads
+    rows from at most ``fanin`` source partitions of the level below, and
+    the grouping is the same under task retry. Levels are added until at
+    most ``fanin`` groups per key remain; their count comes from
+    :func:`_planned_partitions`, so the levels are stages of the caller's
+    single action. The caller runs the last merge over what is returned:
+    at most ``fanin`` rows per key when ``df`` holds one row per key and
+    partition, as built partials do.
+    """
+    if fanin < 2:
+        raise ValueError("fanin must be >= 2")
+    groups, levels = _planned_partitions(df), 0
+    while groups > fanin:
+        groups, levels = -(-groups // fanin), levels + 1
+    if not levels:
+        return df
+
+    def level(key, pdf):
+        return merge_fn(key[:-1], pdf).assign(_g=int(key[-1]) // fanin)
+
+    df = df.withColumn("_g", F.expr(f"spark_partition_id() div {fanin}").cast("int"))
+    for _ in range(levels):
+        df = df.groupBy(*keys, "_g").applyInPandas(level, f"{schema}, _g int")
+    return df.drop("_g")
+
+
+def _sketch_merger(spec: SketchSpec, key_cols=("name", "kind")):
     def mrg(key, pdf):
-        m = spec.merge_blobs([bytes(b) for b in pdf["sketch"]])
-        return pd.DataFrame(
-            {
-                "name": [str(key[0])],
-                "kind": [str(key[1])],
-                "sketch": [m.to_bytes()],
-                "rows": [int(pdf["rows"].sum())],
-            }
-        )
+        # sorted blobs: a canonical order, so order-sensitive KLL/t-digest
+        # merges give the same bytes whatever order the shuffle delivers
+        m = spec.merge_blobs(sorted(bytes(b) for b in pdf["sketch"]))
+        keys = {c: [k] for c, k in zip(key_cols, key)}
+        return pd.DataFrame({**keys, "sketch": [m.to_bytes()], "rows": [int(pdf["rows"].sum())]})
 
-    # eager materialization: the sizing count must not re-run the build
-    df = partials.localCheckpoint(eager=True)
-    while True:
-        mx = (
-            df.groupBy("name", "kind")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.max("c").alias("m"))
-            .first()["m"]
-        )
-        if mx is None or mx <= fanin:
-            break
-        groups = math.ceil(mx / fanin)
-        df = (
-            df.withColumn("_g", F.pmod(F.xxhash64("sketch"), F.lit(groups)))
-            .groupBy("name", "kind", "_g")
-            .applyInPandas(lambda key, pdf: mrg(key[:2], pdf), SKETCH_SCHEMA)
-        ).localCheckpoint(eager=True)
-    return df.groupBy("name", "kind").applyInPandas(mrg, SKETCH_SCHEMA)
+    return mrg
+
+
+def merge_sketch_partials(partials: DataFrame, spec: SketchSpec, fanin: int = 64) -> DataFrame:
+    """Tree-reduce to one row per (name, kind); only blobs shuffle. No merge
+    task reads rows from more than ``fanin`` source partitions."""
+    mrg = _sketch_merger(spec)
+    merged = tree_reduce(partials, ["name", "kind"], mrg, SKETCH_SCHEMA, fanin)
+    return merged.groupBy("name", "kind").applyInPandas(mrg, SKETCH_SCHEMA)
 
 
 def build_sketch(df: DataFrame, spec: SketchSpec, col, col_is_hash: bool = False, fanin: int = 64):
-    """build + merge + collect: returns the kernel object on the driver."""
-    merged = merge_sketch_partials(
-        build_sketch_partials(df, spec, col, col_is_hash=col_is_hash), spec, fanin=fanin
-    )
-    rows = merged.collect()
-    if not rows:
-        return spec.make(0)
-    assert len(rows) == 1
-    blob = bytes(rows[0]["sketch"])
-    return spec.merge_blobs([blob])
+    """build + merge + collect in one Spark action: the at most ``fanin``
+    last-level blobs merge on the driver, in sorted order, into the
+    returned kernel object."""
+    partials = build_sketch_partials(df, spec, col, col_is_hash=col_is_hash)
+    reduced = tree_reduce(partials, ["name", "kind"], _sketch_merger(spec), SKETCH_SCHEMA, fanin)
+    blobs = sorted(bytes(r["sketch"]) for r in reduced.select("sketch").collect())
+    return spec.merge_blobs(blobs) if blobs else spec.make(0)
 
 
 def build_sketch_grouped(
@@ -217,14 +256,9 @@ def build_sketch_grouped(
         return pd.DataFrame({group_col: [key[0]], "sketch": [sk.to_bytes()], "rows": [len(pdf)]})
 
     partials = sel.groupBy(group_col, "_salt").applyInPandas(build, partial_schema)
-
-    def mrg(key, pdf):
-        m = spec.merge_blobs([bytes(b) for b in pdf["sketch"]])
-        return pd.DataFrame(
-            {group_col: [key[0]], "sketch": [m.to_bytes()], "rows": [int(pdf["rows"].sum())]}
-        )
-
-    return partials.groupBy(group_col).applyInPandas(mrg, partial_schema)
+    return partials.groupBy(group_col).applyInPandas(
+        _sketch_merger(spec, (group_col,)), partial_schema
+    )
 
 
 def grouped_estimates(grouped: DataFrame, spec: SketchSpec, group_col: str) -> DataFrame:

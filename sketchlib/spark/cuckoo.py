@@ -8,9 +8,10 @@ The Spark-native re-expression of the reference's command surface
   filters via Arrow-batched ``mapInPandas`` (NO shuffle for the build; no
   per-row Python: each Arrow batch is one vectorized kernel call)
 - merge (distributed-only need) → :func:`merge_partials` — fan-in-bounded
-  tree of ``applyInPandas`` stages shuffling only the small partial blobs;
-  canonical merge makes the result byte-identical for ANY tree shape or
-  input partitioning (SURVEY.md §2.3)
+  tree of ``applyInPandas`` stages (``agg.tree_reduce``, all inside the
+  caller's one action) shuffling only the small partial blobs; canonical
+  merge makes the result byte-identical for ANY tree shape or input
+  partitioning (SURVEY.md §2.3)
 - ``CF.CHECK``  → :func:`probe` — merged blobs broadcast once per executor,
   probes answered by a vectorized ``mapInPandas`` (semantically a broadcast
   left-semi join with bounded one-sided false positives)
@@ -29,7 +30,6 @@ broadcast ships each executor only the blob dictionary once.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -45,6 +45,7 @@ from sketchlib.kernels.cuckoo import (
     canonical_pairs,
     pack_pairs,
 )
+from sketchlib.spark.agg import tree_reduce
 from sketchlib.util import i64_to_u64, shard_of, stable_seed
 
 #: one row per (sketch name, shard[, build partition]) — the Spark analogue
@@ -224,67 +225,52 @@ def build_partials(
 # ----------------------------------------------------------------- merge
 
 
+def _merged_row(name, shard, sketch, fpcount, toofull, broken, rows, dropped) -> dict:
+    """One PARTIAL_SCHEMA row of merged state: it spans partitions."""
+    return {
+        "name": name, "shard": shard, "part_id": -1, "sketch": sketch, "fpcount": fpcount,
+        "toofull": toofull, "broken": broken, "rows": rows, "dropped": dropped,
+    }
+
+
+def _filter_row(name, shard, flt: CuckooFilter, rows, dropped) -> dict:
+    return _merged_row(
+        name, shard, flt.to_bytes(), flt.fpcount, flt.is_toofull(), flt.is_broken(), rows, dropped
+    )
+
+
 def _merge_group(key, pdf, final=True):
     name, shard = str(key[0]), int(key[1])
     blobs = [bytes(b) for b in pdf["sketch"]]
-    in_fp = int(pdf["fpcount"].sum())
-    any_broken = bool(pdf["broken"].any())
-    if final:
-        m = CuckooFilter.merge(blobs, seed=stable_seed("merge", name, shard), on_toofull="count")
-        sketch = m.to_bytes()
-        fpcount = m.fpcount
-        toofull, broken = m.is_toofull(), m.is_broken() or any_broken
-        dropped = int(pdf["dropped"].sum()) + (in_fp - m.fpcount)
-    else:
+    in_fp, rows = int(pdf["fpcount"].sum()), int(pdf["rows"].sum())
+    broken, dropped = bool(pdf["broken"].any()), int(pdf["dropped"].sum())
+    if not final:
         # intermediate tree stage: cheap pair concatenation, no filter build
         sketch = CuckooFilter.concat_pair_blobs(blobs)
-        fpcount = in_fp
-        toofull, broken = bool(pdf["toofull"].any()), any_broken
-        dropped = int(pdf["dropped"].sum())
-    return pd.DataFrame(
-        {
-            "name": [name],
-            "shard": [shard],
-            "part_id": [-1],  # merged rows span partitions
-            "sketch": [sketch],
-            "fpcount": [fpcount],
-            "toofull": [toofull],
-            "broken": [broken],
-            "rows": [int(pdf["rows"].sum())],
-            "dropped": [dropped],
-        }
-    )
+        toofull = bool(pdf["toofull"].any())
+        return pd.DataFrame([_merged_row(name, shard, sketch, in_fp, toofull, broken, rows, dropped)])
+    m = CuckooFilter.merge(blobs, seed=stable_seed("merge", name, shard), on_toofull="count")
+    # pair blobs carry no broken flag: OR it in from the rows, so the blob
+    # does not depend on how many tree levels came before
+    m.broken = m.broken or broken
+    return pd.DataFrame([_filter_row(name, shard, m, rows, dropped + in_fp - m.fpcount)])
 
 
 def merge_partials(partials: DataFrame, fanin: int = 64) -> DataFrame:
     """Tree-reduce the partials to one row per (name, shard).
 
-    Stages with more than ``fanin`` partials per shard are pre-merged in
-    groups (group assignment hashes the blob — arbitrary but deterministic;
-    the canonical merge makes any grouping byte-equivalent), so no single
-    task ever merges more than ``fanin`` blobs. Only partial blobs shuffle.
-
-    Partials are materialized eagerly (localCheckpoint) before the sizing
-    count so the expensive build stage runs exactly once — without this the
-    count action would re-execute the whole upstream build.
+    Intermediate levels (:func:`~sketchlib.spark.agg.tree_reduce`)
+    concatenate canonical pairs; no merge task reads rows from more than
+    ``fanin`` source partitions. The final canonical merge per shard stays
+    in Spark, since a shard can be GBs at scale; the canonical merge makes
+    any tree shape byte-equivalent. Only partial blobs shuffle, and the
+    build, every level and the final merge run in the caller's one action.
     """
-    df = partials.localCheckpoint(eager=True)
-    while True:
-        mx = (
-            df.groupBy("name", "shard")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.max("c").alias("m"))
-            .first()["m"]
-        )
-        if mx is None or mx <= fanin:
-            break
-        groups = math.ceil(mx / fanin)
-        df = (
-            df.withColumn("_g", F.pmod(F.xxhash64("sketch"), F.lit(groups)))
-            .groupBy("name", "shard", "_g")
-            .applyInPandas(lambda key, pdf: _merge_group(key[:2], pdf, final=False), PARTIAL_SCHEMA)
-        ).localCheckpoint(eager=True)
-    return df.groupBy("name", "shard").applyInPandas(
+    levels = tree_reduce(
+        partials, ["name", "shard"], lambda key, pdf: _merge_group(key, pdf, final=False),
+        PARTIAL_SCHEMA, fanin,
+    )
+    return levels.groupBy("name", "shard").applyInPandas(
         lambda key, pdf: _merge_group(key, pdf, final=True), PARTIAL_SCHEMA
     )
 
@@ -306,8 +292,6 @@ def fold_partials_into(prior: DataFrame, partials: DataFrame, spec: CuckooSpec) 
     canonical path (see ``CuckooFilter.merge_into``). ``prior`` may be
     empty (first batch folds into a fresh filter seeded exactly like the
     canonical merge)."""
-    import pandas as pd
-
     def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
         name, shard = key[0], int(key[1])
         pr = pdf[pdf["_prior"]]
@@ -320,19 +304,8 @@ def fold_partials_into(prior: DataFrame, partials: DataFrame, spec: CuckooSpec) 
             )
         expected = flt.fpcount + int(rest["fpcount"].sum())
         flt.merge_into([bytes(b) for b in rest["sketch"]], on_toofull="count")
-        return pd.DataFrame(
-            {
-                "name": [name],
-                "shard": [shard],
-                "part_id": [-1],
-                "sketch": [flt.to_bytes()],
-                "fpcount": [flt.fpcount],
-                "toofull": [flt.is_toofull()],
-                "broken": [flt.is_broken()],
-                "rows": [int(pdf["rows"].sum())],
-                "dropped": [int(pdf["dropped"].sum()) + (expected - flt.fpcount)],
-            }
-        )
+        dropped = int(pdf["dropped"].sum()) + (expected - flt.fpcount)
+        return pd.DataFrame([_filter_row(name, shard, flt, int(pdf["rows"].sum()), dropped)])
 
     tagged = prior.withColumn("_prior", F.lit(True)).unionByName(
         partials.withColumn("_prior", F.lit(False))
@@ -390,19 +363,7 @@ def build_filter_direct(
             order = np.lexsort((fp, bidx))
             flt = CuckooFilter.create(size, fpsize, seed=stable_seed("merge", name, s))
             dropped = flt.add_batch(bidx[order], fp[order], on_toofull="count")
-            out.append(
-                {
-                    "name": name,
-                    "shard": s,
-                    "part_id": -1,
-                    "sketch": flt.to_bytes(),
-                    "fpcount": flt.fpcount,
-                    "toofull": flt.is_toofull(),
-                    "broken": flt.is_broken(),
-                    "rows": rows[s],
-                    "dropped": dropped,
-                }
-            )
+            out.append(_filter_row(name, s, flt, rows[s], dropped))
         if out:
             yield pd.DataFrame(out)
 
@@ -646,8 +607,9 @@ def semi_join_via_filter(
     fingerprints and silently drop items), and the build's drop/too-full
     counters are checked — a dropped fingerprint would be a silent false
     negative, so it raises instead. The merged filter is localCheckpointed
-    before probing (the sizing aggregate and blob collect would otherwise
-    re-execute the build shuffle — the merge_partials precedent).
+    before probing: the guard, probe_auto's size aggregate and its blob
+    collect are three actions, and each would otherwise re-run the build
+    shuffle.
     """
     from sketchlib.kernels.cuckoo import TooFullError, size_for
 
@@ -756,19 +718,7 @@ def remove_keys(
                 flt.remove_batch(h[order], f[order])
             except BrokenError:
                 pass  # shard poisoned; flag carried in the row
-        return pd.DataFrame(
-            {
-                "name": [name],
-                "shard": [shard],
-                "part_id": [-1],
-                "sketch": [flt.to_bytes()],
-                "fpcount": [flt.fpcount],
-                "toofull": [flt.is_toofull()],
-                "broken": [flt.is_broken()],
-                "rows": [rows],
-                "dropped": [drop],
-            }
-        )
+        return pd.DataFrame([_filter_row(name, shard, flt, rows, drop)])
 
     return (
         merged.groupby("name", "shard")

@@ -120,12 +120,69 @@ def test_pairs_and_dense_partials_merge_identically(spark, docs):
         )
         return {r["shard"]: bytes(r["sketch"]) for r in m.collect()}
 
-    assert blobs("pairs") == blobs("dense") == blobs("pairs", fanin=2)
+    # 5 input partitions at fanin 2: both formats go through two tree levels
+    assert blobs("pairs") == blobs("dense") == blobs("pairs", fanin=2) == blobs("dense", fanin=2)
     # pairs partials are small: ~12B/row, not the filter size
     p = build_partials(docs.repartition(5), spec, key=key, partial_format="pairs")
     sizes = [(r["rows"], len(bytes(r["sketch"]))) for r in p.collect()]
     for rows, nbytes in sizes:
         assert nbytes <= 12 * rows + 64
+
+
+def test_merge_plan_runs_no_checkpoint_or_sizing_job(spark, docs, count_jobs):
+    """Building the merge tree runs no Spark job: no checkpoint of the
+    partials, no sizing query. The levels are stages of the one plan."""
+    spec = CuckooSpec(name="plan", size=size_for(2000, 2), fpsize=2, num_shards=2)
+    key = F.col("doc_id").cast("string")
+    with count_jobs("merge-plan") as jobs:
+        merged = merge_partials(build_partials(docs.repartition(5), spec, key=key), fanin=2)
+        plan = merged._jdf.queryExecution().executedPlan().toString()
+    assert jobs == []
+    assert "ExistingRDD" not in plan  # a checkpointed input scans as an RDD
+    assert "HashAggregate" not in plan
+    # 5 partitions at fanin 2: levels of 3 and 2 groups, then the final merge
+    assert plan.count("FlatMapGroupsInPandas") == 3
+    assert ShardedCuckoo.from_df(merged, spec).count() == docs.count()
+
+
+@pytest.mark.parametrize(
+    "layout",
+    [lambda d: d.coalesce(1), lambda d: d.coalesce(2), lambda d: d.repartition(3)],
+    ids=["coalesce1", "coalesce2", "repartition3"],
+)
+def test_parquet_partials_merge_like_build_filter(spark, docs, tmp_path, layout):
+    """Partials read back from parquet (the checkpointed_build and streaming
+    shape) hold many rows per key in each partition; merged at fanin 2
+    they give the same filter, byte for byte, as build_filter."""
+    spec = CuckooSpec(name="pq", size=size_for(2000, 2), fpsize=2, num_shards=2)
+    key = F.col("doc_id").cast("string")
+    path = str(tmp_path / "partials")
+    build_partials(docs.repartition(7), spec, key=key).write.parquet(path)
+    read = layout(spark.read.parquet(path))
+
+    def rows(df):
+        return {r["shard"]: (bytes(r["sketch"]), r["fpcount"], r["rows"]) for r in df.collect()}
+
+    assert rows(merge_partials(read, fanin=2)) == rows(build_filter(docs, spec, key=key))
+
+
+def test_broken_flag_survives_any_tree_shape(spark, docs):
+    """A poisoned merged state folded with new partials (the streaming
+    canonical shape) gives the same broken blob whether or not the tree
+    runs intermediate levels, whose pair blobs carry no flag."""
+    spec = CuckooSpec(name="brk", size=size_for(4000, 2), fpsize=2)
+    key = F.col("doc_id").cast("string")
+    ghosts = spark.range(3).select((F.col("id") + 99_000_000).cast("string").alias("k"))
+    state = remove_keys(build_filter(docs, spec, key=key), ghosts, spec, key="k")
+    more = docs.select((F.col("doc_id") + 1_000_000).alias("doc_id")).repartition(5)
+    both = state.unionByName(build_partials(more, spec, key=key))
+
+    def merged(fanin):
+        return [(bytes(r["sketch"]), r["broken"]) for r in merge_partials(both, fanin=fanin).collect()]
+
+    direct, tree = merged(64), merged(2)
+    assert direct == tree
+    assert tree[0][1] and CuckooFilter.from_bytes(tree[0][0]).is_broken()
 
 
 def test_direct_build_matches_tree_merge(spark, docs):

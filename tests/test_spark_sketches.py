@@ -105,3 +105,27 @@ def test_kmv_vs_exact_distinct(spark, events):
     exact = events.filter(F.col("user_id").isNotNull()).select("user_id").distinct().count()
     assert abs(sk.estimate() - exact) <= 3 * sk.rel_error * exact + 1
     assert sk.count == events.filter(F.col("user_id").isNotNull()).count()
+
+
+def test_build_sketch_is_one_job(spark, count_jobs):
+    """At most ``fanin`` input partitions: no merge shuffle, so the build,
+    the collect of the partials and the driver merge are one Spark job."""
+    df = spark.range(0, 20_000, numPartitions=4)
+    with count_jobs("build-sketch") as jobs:
+        hll = build_sketch(df, SketchSpec("one-job", "hll", (12,)), "id", fanin=4)
+    assert len(jobs) == 1
+    assert abs(hll.estimate() - 20_000) <= 0.1 * 20_000
+
+
+@pytest.mark.parametrize("fanin", [64, 2])
+@pytest.mark.parametrize("kind,params", [("kll", (256,)), ("tdigest", (200,))])
+def test_quantile_blobs_deterministic(spark, kind, params, fanin):
+    """Order-sensitive merges get a canonical order (sorted blobs, in the
+    tree levels and on the driver): two runs over the same partitioning
+    give byte-identical sketches."""
+    df = spark.range(0, 30_000, numPartitions=6).select(
+        ((F.col("id") * 7919) % 10007).cast("double").alias("v")
+    )
+    spec = SketchSpec(f"det-{kind}", kind, params)
+    runs = [build_sketch(df, spec, "v", fanin=fanin).to_bytes() for _ in range(2)]
+    assert runs[0] == runs[1]
